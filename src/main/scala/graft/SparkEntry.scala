@@ -580,6 +580,9 @@ object SparkEntry {
       |FROM (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS __cents FROM events) e
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
+  /** Every memo below registers here; [[memoFamilies]] reads it. */
+  private implicit val memoRegistry: Memo.Registry = new Memo.Registry
+
   /** Shared aggregation for the alternate-format ingestion queries: the
     * same weekly count + exact-cents sum regardless of which format the
     * events came back from — one definition so the two format legs grade
@@ -594,39 +597,38 @@ object SparkEntry {
     * rebuilt the lineitem self-join pair stage from the scan up —
     * `triangle_count` alone measured 22.3 s isolated at sf0.1, most of it
     * edge derivation. Same memoized-localCheckpoint contract as
-    * [[ivfCodebooks]] / [[gradedVerifiedPairs]] (JVM lifetime, immutable
+    * [[ivfCodebook]] / [[gradedVerifiedPairs]] (JVM lifetime, immutable
     * testdata dirs); keyed by (application, dir) because checkpointed
     * frames are context-bound. At 100 TB the analog is writing the edge
     * list once per snapshot and pointing every graph consumer at it.
     */
-  private val basketGraphCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (DataFrame, DataFrame, DataFrame)]
-
-  private def basketGraph(s: SparkSession,
-                          d: String): (DataFrame, DataFrame, DataFrame) =
-    basketGraphCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      // checkpointFanOut on the basket key: the checkpoint's own
-      // partitioning is what coOccurrenceEdges' basket self-join runs at
-      // (equi key `b`, so the pinned exchange is the one the join needs).
-      // The EDGE checkpoint deliberately stays at AQE's narrow width: the
-      // enumeration-heavy consumers re-widen internally at their oriented
-      // frame (GraphOps.edgeSupports/triangleCountsOf), while the
-      // iterative peels (k-core, BFS, LPA) run many tiny waves over the
-      // edge list where extra width is pure task-launch overhead
-      // (measured: a 32-wide edge memo took k_core_parts 3.6 s → 6.7 s).
-      val sized = ScaleOps.checkpointFanOut(
-        BasketOps.cappedBasketItems(Tables.lineitem(s, d),
-          "l_orderkey", "l_partkey", maxBasketSize = 6), col("b"))
-      val edges = GraphOps.coOccurrenceEdges(sized, "b", "i")
-        .localCheckpoint(true)
-      // Degrees ride in the memo too: link_predict consumes the table
-      // three times (hub filter + two attaches) and triangle_count once —
-      // without this each use re-shuffles the full edge list into a fresh
-      // degree aggregation per execution.
-      val degrees = GraphOps.nodeDegrees(edges).localCheckpoint(true)
-      (sized, edges, degrees)
-    })
+  private val basketGraph = Memo("basket_graph",
+    Set("copurchase_lift", "triangle_count", "link_predict",
+      "pagerank_parts", "k_core_parts", "k_truss_parts",
+      "bfs_hops_parts", "connected_components", "label_propagation",
+      "community_modularity", "negative_edges", "random_walks",
+      "skipgram_pairs")) { (s, d) =>
+    // checkpointFanOut on the basket key: the checkpoint's own
+    // partitioning is what coOccurrenceEdges' basket self-join runs at
+    // (equi key `b`, so the pinned exchange is the one the join needs).
+    // The EDGE checkpoint deliberately stays at AQE's narrow width: the
+    // enumeration-heavy consumers re-widen internally at their oriented
+    // frame (GraphOps.edgeSupports/triangleCountsOf), while the
+    // iterative peels (k-core, BFS, LPA) run many tiny waves over the
+    // edge list where extra width is pure task-launch overhead
+    // (measured: a 32-wide edge memo took k_core_parts 3.6 s → 6.7 s).
+    val sized = ScaleOps.checkpointFanOut(
+      BasketOps.cappedBasketItems(Tables.lineitem(s, d),
+        "l_orderkey", "l_partkey", maxBasketSize = 6), col("b"))
+    val edges = GraphOps.coOccurrenceEdges(sized, "b", "i")
+      .localCheckpoint(true)
+    // Degrees ride in the memo too: link_predict consumes the table
+    // three times (hub filter + two attaches) and triangle_count once —
+    // without this each use re-shuffles the full edge list into a fresh
+    // degree aggregation per execution.
+    val degrees = GraphOps.nodeDegrees(edges).localCheckpoint(true)
+    (sized, edges, degrees)
+  }
 
   /** The hub-filtered, center-partitioned wedge adjacency at the graded
     * cap, memoized like the edge list it derives from. Round-10's
@@ -640,14 +642,11 @@ object SparkEntry {
     * per-query scratch). Separate cache from [[basketGraph]] so the
     * eleven other family members don't pay its build on first touch.
     */
-  private val linkAdjCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def linkAdjacency(s: SparkSession, d: String): DataFrame =
-    linkAdjCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
+  private val linkAdjacency = Memo("link_adj", Set("link_predict")) {
+    (s, d) =>
       val (_, edges, deg) = basketGraph(s, d)
       GraphOps.linkPredictionAdjacency(edges, deg, maxDegree = 100L)
-    })
+  }
 
   /** The co-purchase graph's TRIANGLE LIST, memoized like the edge list
     * it derives from (same (application, dir) key, same JVM-lifetime /
@@ -661,12 +660,10 @@ object SparkEntry {
     * [[basketGraph]] so non-triangle family members don't pay the
     * enumeration on first touch.
     */
-  private val basketTriCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def basketTriangles(s: SparkSession, d: String): DataFrame =
-    basketTriCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      GraphOps.triangleList(basketGraph(s, d)._2))
+  private val basketTriangles = Memo.releasing("basket_triangles",
+    Set("triangle_count", "k_truss_parts"), Dedup.unpersistCheckpoint) {
+    (s, d) => GraphOps.triangleList(basketGraph(s, d)._2)
+  }
 
   private def weeklyFormatAgg(events: DataFrame): DataFrame =
     events
@@ -734,22 +731,44 @@ object SparkEntry {
     * linearly with the corpus. The cap covers the whole fixture today
     * (max vec_id 1999), so the trained codebook is unchanged.
     *
-    * Cache lifetime = JVM: keyed by the sfDir string, so regenerating the
-    * parquet under the same path within one process would serve a stale
-    * codebook — acceptable for the driver/bench contract, where testdata
-    * dirs are immutable.
+    * Memo lifetime = JVM ([[Memo]]): regenerating the parquet under the
+    * same path within one process would serve a stale codebook —
+    * acceptable for the driver/bench contract, where testdata dirs are
+    * immutable.
     */
-  private val ivfCodebooks =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfCodebook]
+  private val ivfCodebook = Memo("ivf_codebook") { (s, d) =>
+    Similarity.trainCodebook(codebookTrainingSet(Tables.embeddings(s, d)),
+      nlist = 16)
+  }
+
+  /** The IVF codebook training set: a key-mod sample bounded to ≤10k rows
+    * when it holds at least 160 rows (enough for a stable fit), else the
+    * whole frame.
+    */
+  private def codebookTrainingSet(e: DataFrame): DataFrame = {
+    val sample = e.where(pmod(col("vec_id"), lit(5)) === 0
+      && col("vec_id") < 50000)
+    if (sample.select("vec_id").take(160).length >= 160) sample else e
+  }
 
   /** Eval-side 8-gram bloom filter per scale-factor dir, built once and
     * memoized (same bounded-collect contract and cache-lifetime caveats
-    * as [[ivfCodebooks]]: the distributed aggregate returns only the
+    * as [[ivfCodebook]]: the distributed aggregate returns only the
     * KB-scale bit array). Deterministic — fixed hash, OR-merged bits —
     * so memoization cannot change the graded result.
     */
-  private val evalGramBlooms =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Array[Byte]]]
+  private val evalGramBloom = Memo("eval_gram_bloom") { (s, d) =>
+    val eval = Tables.documents(s, d)
+      .where(pmod(col("doc_id"), lit(10)) === 7)
+    val grams = CorpusOps.ngramSet(eval, "doc_id", "text", n = 8)
+      .select("gram").distinct()
+    // sizing needs the true cardinality (a small count job over the
+    // already-distinct gram frame); eval corpora are small by nature
+    val n = grams.count()
+    if (n == 0) None
+    else BloomOps.buildBloom(grams, col("gram"), expectedItems = n,
+      fpp = 1e-4)
+  }
 
   /** The 64-round BPE model per scale-factor dir, trained once and
     * memoized — train-small / apply-wide made literal across the three
@@ -758,15 +777,16 @@ object SparkEntry {
     * driver-argmax jobs for bit-identical output. Deterministic (exact
     * counts, total argmax order), so memoization cannot change any
     * graded result. Same JVM-lifetime / immutable-dir contract as
-    * [[ivfCodebooks]].
+    * [[ivfCodebook]].
     */
-  private val bpeModels = scala.collection.concurrent.TrieMap
-    .empty[(String, String), CorpusOps.BpeModel]
-
-  private def bpeModel(s: SparkSession, d: String): CorpusOps.BpeModel =
-    bpeModels.getOrElseUpdate((s.sparkContext.applicationId, d),
-      CorpusOps.bpeTrain(Tables.documents(s, d), "text", bpeEncodeRounds,
-        fanKey = Some(col("doc_id"))))
+  private val bpeModel = Memo.releasing[CorpusOps.BpeModel]("bpe_model",
+    Set("bpe_encode_stats", "bpe_encode_ids", "bpe_pack_ids",
+      "bpe_decode_roundtrip", "bpe_pack_report"),
+    m => Seq(m.merges, m.vocab, m.baseChars)
+      .foreach(Dedup.unpersistCheckpoint)) { (s, d) =>
+    CorpusOps.bpeTrain(Tables.documents(s, d), "text", bpeEncodeRounds,
+      fanKey = Some(col("doc_id")))
+  }
 
   /** The corpus encoded to token-id sequences ONCE per (application,
     * dir) — the apply-wide product all four id-level consumers read
@@ -778,45 +798,31 @@ object SparkEntry {
     * the same magnitude as the source text. Evicted by its memo family
     * after the last consumer.
     */
-  private val bpeEncodedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def bpeEncoded(s: SparkSession, d: String): DataFrame =
-    bpeEncodedCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      CorpusOps.bpeEncodeIds(Tables.documents(s, d), "doc_id", "text",
-        bpeModel(s, d)).localCheckpoint(true))
-
-  private def evalGramBloom(s: SparkSession, d: String): Option[Array[Byte]] =
-    evalGramBlooms.getOrElseUpdate(d, {
-      val eval = Tables.documents(s, d)
-        .where(pmod(col("doc_id"), lit(10)) === 7)
-      val grams = CorpusOps.ngramSet(eval, "doc_id", "text", n = 8)
-        .select("gram").distinct()
-      // sizing needs the true cardinality (a small count job over the
-      // already-distinct gram frame); eval corpora are small by nature
-      val n = grams.count()
-      if (n == 0) None
-      else BloomOps.buildBloom(grams, col("gram"), expectedItems = n,
-        fpp = 1e-4)
-    })
+  private val bpeEncoded = Memo.releasing("bpe_encoded",
+    Set("bpe_encode_ids", "bpe_pack_ids", "bpe_decode_roundtrip",
+      "bpe_pack_report"), Dedup.unpersistCheckpoint) { (s, d) =>
+    CorpusOps.bpeEncodeIds(Tables.documents(s, d), "doc_id", "text",
+      bpeModel(s, d)).localCheckpoint(true)
+  }
 
   /** Events staged once per sfDir through [[Tables.events]] (micros ts)
     * into a temp dir the file-stream source can tail — streaming the
     * driver parquet directly is impossible (TIMESTAMP(NANOS), see
     * Tables.events), and the staging IS the production shape: a landing
-    * zone the stream reads. Memoized like [[ivfCodebooks]] (same JVM
+    * zone the stream reads. Memoized like [[ivfCodebook]] (same JVM
     * lifetime / immutable-testdata caveat).
     */
-  private val stagedEventDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val stagedEvents = Memo("staged_events") { (s, d) =>
+    staged("graft-events-stream")(
+      Tables.events(s, d).write.mode("overwrite").parquet)
+  }
 
-  private def stagedEvents(s: SparkSession, d: String): String =
-    stagedEventDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-events-stream").toString
-      Tables.events(s, d).write.mode("overwrite").parquet(dir)
-      dir
-    })
+  /** A fresh temp dir named `prefix…`, filled by `write`. */
+  private def staged(prefix: String)(write: String => Unit): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    write(dir)
+    dir
+  }
 
   private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -835,21 +841,16 @@ object SparkEntry {
     * files, which is what makes each micro-batch's per-batch PSI
     * COMPLETE whatever the file→trigger mapping. Memoized per sfDir.
     */
-  private val stagedQpsiDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedQpsiBatches(s: SparkSession, d: String): String =
-    stagedQpsiDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-qpsi-stream").toString
+  private val stagedQpsiBatches = Memo("staged_qpsi_batches") { (s, d) =>
+    staged("graft-qpsi-stream") { dir =>
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) === 5)
         .select(col("doc_id"), col("lang"), col("text"),
           expr("(doc_id div 10) % 3").as("batch_id"))
         .repartitionByRange(3, col("batch_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** The embedding drift-gate ingest fixture — [[stagedQpsiBatches]] in
     * embedding space: the vec_id%10==5 slice stamped with batch_id =
@@ -858,21 +859,16 @@ object SparkEntry {
     * readout is complete whatever the file→trigger mapping. Memoized
     * per sfDir.
     */
-  private val stagedEpsiDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedEpsiBatches(s: SparkSession, d: String): String =
-    stagedEpsiDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-epsi-stream").toString
+  private val stagedEpsiBatches = Memo("staged_epsi_batches") { (s, d) =>
+    staged("graft-epsi-stream") { dir =>
       Tables.embeddings(s, d)
         .where(pmod(col("vec_id"), lit(10)) === 5)
         .select(col("vec_id"), col("embedding"),
           expr("(vec_id div 10) % 3").as("batch_id"))
         .repartitionByRange(3, col("batch_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** The decontamination gate's frozen state: DISTINCT 8-gram digests of
     * the held-out eval slice (doc_id%10==7) as a digest-bucketed table —
@@ -881,37 +877,28 @@ object SparkEntry {
     * ever sit in the manifest or cross its probe join. Memoized per
     * sfDir like the dedup manifests.
     */
-  private val decontamStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  private val decontamState = Memo("decontam_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_evalgrams_$tag"
+    ScaleOps.writeBucketed(
+      CorpusOps.ngramSet(
+        Tables.documents(s, d).where(pmod(col("doc_id"), lit(10)) === 7),
+        "doc_id", "text", n = 8)
+        .select(md5(col("gram").cast("binary")).as("g")).distinct()
+        .repartition(8, col("g")),
+      mt, Seq("g"), buckets = 8)
+    mt
+  }
 
-  private def decontamState(s: SparkSession, d: String): String =
-    decontamStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_evalgrams_$tag"
-      ScaleOps.writeBucketed(
-        CorpusOps.ngramSet(
-          Tables.documents(s, d).where(pmod(col("doc_id"), lit(10)) === 7),
-          "doc_id", "text", n = 8)
-          .select(md5(col("gram").cast("binary")).as("g")).distinct()
-          .repartition(8, col("g")),
-        mt, Seq("g"), buckets = 8)
-      mt
-    })
-
-  private val stagedDocDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedDocBatches(s: SparkSession, d: String): String =
-    stagedDocDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-docs-stream").toString
+  private val stagedDocBatches = Memo("staged_doc_batches") { (s, d) =>
+    staged("graft-docs-stream") { dir =>
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(10)) === 1 && col("doc_id") < 10000
           && pmod(expr("doc_id div 10"), lit(2)) === 1)
         .repartitionByRange(3, col("doc_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** The cosine BATCH half staged as a 3-file parquet dir — the
     * streaming-ingest fixture for `stream_cosine_incremental`, the
@@ -922,19 +909,14 @@ object SparkEntry {
     * else when the later one probes the manifest already holding the
     * earlier).
     */
-  private val stagedEmbDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedEmbBatches(s: SparkSession, d: String): String =
-    stagedEmbDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-emb-stream").toString
+  private val stagedEmbBatches = Memo("staged_emb_batches") { (s, d) =>
+    staged("graft-emb-stream") { dir =>
       Tables.embeddings(s, d)
         .where(col("vec_id") < 2000 && pmod(col("vec_id"), lit(2)) === 1)
         .repartitionByRange(3, col("vec_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** The SimHash BATCH half (odd ids of the full corpus) staged as a
     * 3-file parquet dir — the streaming-ingest fixture for
@@ -943,41 +925,35 @@ object SparkEntry {
     * streamed union grades against the exact Hamming truth, not a
     * contract boolean.
     */
-  private val stagedSimhashDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedSimhashBatches(s: SparkSession, d: String): String =
-    stagedSimhashDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-simhash-stream").toString
+  private val stagedSimhashBatches = Memo("staged_simhash_batches") { (s, d) =>
+    staged("graft-simhash-stream") { dir =>
       Tables.documents(s, d)
         .where(pmod(col("doc_id"), lit(2)) === 1)
         .repartitionByRange(3, col("doc_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** Events re-staged once per (sfDir, format) into a temp dir — the
     * alternate-format ingestion fixtures (ORC, JSON lines). Same memoize
     * contract as [[stagedEvents]]; the graded queries prove the engine
     * reads these formats with identical query semantics by aggregating
     * the round-tripped data against the PARQUET-derived oracle.
+    *
+    * opts participates in the key: two stagings of the same format with
+    * different writer options (e.g. timestamp formats) are different
+    * fixtures — a (dir, fmt)-only key would silently serve the first.
     */
-  private val altFormatDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Map[String, String]), String]
+  private val stagedFormats =
+    Memo.keyed[(String, Map[String, String]), String]("staged_format") {
+      case (s, d, (fmt, opts)) =>
+        staged(s"graft-events-$fmt")(Tables.events(s, d).write
+          .mode("overwrite").options(opts).format(fmt).save)
+    }
 
   private def stagedFormat(s: SparkSession, d: String, fmt: String,
                            opts: Map[String, String] = Map.empty): String =
-    // opts participates in the key: two stagings of the same format with
-    // different writer options (e.g. timestamp formats) are different
-    // fixtures — a (dir, fmt)-only key would silently serve the first.
-    altFormatDirs.getOrElseUpdate((d, fmt, opts), {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-events-$fmt").toString
-      Tables.events(s, d).write.mode("overwrite").options(opts)
-        .format(fmt).save(dir)
-      dir
-    })
+    stagedFormats(s, d, (fmt, opts))
 
   /** Events re-staged once per dir as a TWO-BATCH parquet layout with
     * schema drift: batch 1 (even event ids) written WITHOUT the `value`
@@ -987,20 +963,15 @@ object SparkEntry {
     * rows surface a NULL `value`, and the aggregate is checked against
     * the oracle replaying the drift as a CASE on the raw table.
     */
-  private val driftDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedDrift(s: SparkSession, d: String): String =
-    driftDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-events-drift").toString
+  private val stagedDrift = Memo("staged_drift") { (s, d) =>
+    staged("graft-events-drift") { dir =>
       val ev = Tables.events(s, d)
       ev.where(pmod(col("event_id"), lit(2)) === 0).drop("value")
         .write.mode("overwrite").parquet(dir + "/b1")
       ev.where(pmod(col("event_id"), lit(2)) =!= 0)
         .write.mode("overwrite").parquet(dir + "/b2")
-      dir
-    })
+    }
+  }
 
   /** Orders re-staged once per dir as a NESTED parquet layout: one row
     * per customer with a `sort_array`-normalized array of order structs
@@ -1011,21 +982,16 @@ object SparkEntry {
     * aggregate exactly, proving the nest → write → read → unnest cycle
     * preserves content.
     */
-  private val nestedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedNestedOrders(s: SparkSession, d: String): String =
-    nestedDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-orders-nested").toString
+  private val stagedNestedOrders = Memo("staged_nested_orders") { (s, d) =>
+    staged("graft-orders-nested") { dir =>
       Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(sort_array(collect_list(struct(col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"), col("o_orderpriority"))))
           .as("orders"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** Micros-precision timestamp format for the CSV leg, applied on BOTH
     * write and read: the CSV default (like JSON's) renders only millis,
@@ -1053,11 +1019,8 @@ object SparkEntry {
     * [[stagedEvents]]; tables are OVERWRITten so a stale warehouse from an
     * earlier process cannot leak in.
     */
-  private val bucketedTableCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
-
-  private def bucketedOrdersCustomer(s: SparkSession, d: String): (String, String) =
-    bucketedTableCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
+  private val bucketedOrdersCustomer = Memo("bucketed_orders_customer") {
+    (s, d) =>
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val ot = s"graft_orders_bkt_$tag"
       val ct = s"graft_customer_bkt_$tag"
@@ -1068,7 +1031,7 @@ object SparkEntry {
         Tables.customer(s, d).repartition(8, col("c_custkey")),
         ct, "c_custkey", buckets = 8)
       (ot, ct)
-    })
+  }
 
   /** The incremental near-dup BAND MANIFEST staged once per (app, dir)
     * as a (band, bucket)-bucketed table — the production contract made
@@ -1079,96 +1042,70 @@ object SparkEntry {
     * incremental_neardup query re-signs per call. Same pre-write
     * repartition-by-the-bucket-spec discipline as
     * [[bucketedOrdersCustomer]] (one sorted file per bucket).
+    *
+    * @return (bucketed band-manifest table, known verified-pairs table)
     */
-  private val neardupManifestCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String)]
-
-  /** @return (bucketed band-manifest table, known verified-pairs table) */
-  private def neardupState(s: SparkSession, d: String): (String, String) =
-    neardupManifestCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_neardup_manifest_$tag"
-      val pt = s"graft_neardup_pairs_$tag"
-      val existing = Tables.documents(s, d)
-        .where(pmod(col("doc_id"), lit(10)) === 1 && col("doc_id") < 10000
-          && pmod(expr("doc_id div 10"), lit(2)) === 0)
-      ScaleOps.writeBucketed(
-        Dedup.bandManifest(existing, "doc_id", "text")
-          .repartition(8, col("band"), col("bucket")),
-        mt, Seq("band", "bucket"), buckets = 8)
-      // the second prior-run artifact: the verified pair list — plain
-      // storage, it is only unioned downstream, never joined
-      s.sql(s"DROP TABLE IF EXISTS $pt")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), pt)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, true)
-      Dedup.verifiedNearDupPairs(existing, "doc_id", "text",
-        threshold = 0.5).write.mode("overwrite").saveAsTable(pt)
-      (mt, pt)
-    })
+  private val neardupState = Memo("neardup_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_neardup_manifest_$tag"
+    val pt = s"graft_neardup_pairs_$tag"
+    val existing = Tables.documents(s, d)
+      .where(pmod(col("doc_id"), lit(10)) === 1 && col("doc_id") < 10000
+        && pmod(expr("doc_id div 10"), lit(2)) === 0)
+    ScaleOps.writeBucketed(
+      Dedup.bandManifest(existing, "doc_id", "text")
+        .repartition(8, col("band"), col("bucket")),
+      mt, Seq("band", "bucket"), buckets = 8)
+    // the second prior-run artifact: the verified pair list — plain
+    // storage, it is only unioned downstream, never joined
+    ScaleOps.dropTable(s, pt)
+    Dedup.verifiedNearDupPairs(existing, "doc_id", "text",
+      threshold = 0.5).write.mode("overwrite").saveAsTable(pt)
+    (mt, pt)
+  }
 
   /** The SimHash tier's persisted state, symmetric to [[neardupState]]:
     * the (band, bval)-bucketed Hamming band manifest plus the known
     * banded-pair list over the even-id half of the full corpus.
     */
-  private val simhashStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String)]
-
-  private def simhashState(s: SparkSession, d: String): (String, String) =
-    simhashStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_simhash_manifest_$tag"
-      val pt = s"graft_simhash_pairs_$tag"
-      val existing = Tables.documents(s, d)
-        .where(pmod(col("doc_id"), lit(2)) === 0)
-      ScaleOps.writeBucketed(
-        Dedup.simhashBandManifest(existing, "doc_id", "text", maxHamming = 3)
-          .repartition(8, col("band"), col("bval")),
-        mt, Seq("band", "bval"), buckets = 8)
-      s.sql(s"DROP TABLE IF EXISTS $pt")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), pt)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, true)
-      Dedup.simhashReplayableBandedPairs(existing, "doc_id", "text",
-        maxHamming = 3).write.mode("overwrite").saveAsTable(pt)
-      (mt, pt)
-    })
+  private val simhashState = Memo("simhash_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_simhash_manifest_$tag"
+    val pt = s"graft_simhash_pairs_$tag"
+    val existing = Tables.documents(s, d)
+      .where(pmod(col("doc_id"), lit(2)) === 0)
+    ScaleOps.writeBucketed(
+      Dedup.simhashBandManifest(existing, "doc_id", "text", maxHamming = 3)
+        .repartition(8, col("band"), col("bval")),
+      mt, Seq("band", "bval"), buckets = 8)
+    ScaleOps.dropTable(s, pt)
+    Dedup.simhashReplayableBandedPairs(existing, "doc_id", "text",
+      maxHamming = 3).write.mode("overwrite").saveAsTable(pt)
+    (mt, pt)
+  }
 
   /** The COSINE tier's persisted state, symmetric to [[neardupState]] /
     * [[simhashState]]: the (tbl, bkt)-bucketed SRP manifest plus the
     * known verified cosine pair list over the even-id half of the capped
     * embedding slice.
     */
-  private val cosineStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String)]
-
-  private def cosineState(s: SparkSession, d: String): (String, String) =
-    cosineStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_cosine_manifest_$tag"
-      val pt = s"graft_cosine_pairs_$tag"
-      val existing = Tables.embeddings(s, d)
-        .where(col("vec_id") < 2000 && pmod(col("vec_id"), lit(2)) === 0)
-      graft.ops.ScaleOps.writeBucketed(
-        graft.functions.Similarity.srpBandRows(existing, "vec_id",
-          "embedding", bits = 4, tables = 24)
-          .repartition(8, col("tbl"), col("bkt")),
-        mt, Seq("tbl", "bkt"), buckets = 8)
-      s.sql(s"DROP TABLE IF EXISTS $pt")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), pt)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, true)
-      graft.functions.Similarity.cosineNearDupPairs(existing, "vec_id",
-        "embedding", threshold = 0.4, bits = 4, tables = 24)
-        .write.mode("overwrite").saveAsTable(pt)
-      (mt, pt)
-    })
+  private val cosineState = Memo("cosine_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_cosine_manifest_$tag"
+    val pt = s"graft_cosine_pairs_$tag"
+    val existing = Tables.embeddings(s, d)
+      .where(col("vec_id") < 2000 && pmod(col("vec_id"), lit(2)) === 0)
+    graft.ops.ScaleOps.writeBucketed(
+      graft.functions.Similarity.srpBandRows(existing, "vec_id",
+        "embedding", bits = 4, tables = 24)
+        .repartition(8, col("tbl"), col("bkt")),
+      mt, Seq("tbl", "bkt"), buckets = 8)
+    ScaleOps.dropTable(s, pt)
+    graft.functions.Similarity.cosineNearDupPairs(existing, "vec_id",
+      "embedding", threshold = 0.4, bits = 4, tables = 24)
+      .write.mode("overwrite").saveAsTable(pt)
+    (mt, pt)
+  }
 
   /** The capped slice's exhaustive cosine truth and full-corpus LSH pair
     * set, memoized: BOTH cosine incremental layouts (batch-persisted and
@@ -1176,53 +1113,43 @@ object SparkEntry {
     * query re-runs the quadratic truth slice and the full LSH pipeline.
     * Checkpointed: pair-scale rows only.
     */
-  private val cosineTruthCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (DataFrame, DataFrame)]
-
-  private def cosineTruthAndFull(s: SparkSession,
-                                 d: String): (DataFrame, DataFrame) =
-    cosineTruthCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
+  private val cosineTruthAndFull = Memo.releasing[(DataFrame, DataFrame)](
+    "cosine_truth",
+    Set("incremental_cosine_persisted", "stream_cosine_incremental"),
+    { case (t, f) =>
+      Dedup.unpersistCheckpoint(t); Dedup.unpersistCheckpoint(f) }) {
+    (s, d) =>
       val slice = Tables.embeddings(s, d).where(col("vec_id") < 2000)
       (graft.functions.Similarity.cosinePairsExhaustive(slice, "vec_id",
           "embedding", threshold = 0.4).localCheckpoint(true),
         graft.functions.Similarity.cosineNearDupPairs(slice, "vec_id",
           "embedding", threshold = 0.4, bits = 4, tables = 24)
           .localCheckpoint(true))
-    })
+  }
 
   /** The frame (aHash) tier's persisted state, symmetric to
     * [[simhashState]]: the (band, bval)-bucketed Hamming band manifest
     * plus the known pair list — both in the PACKED (media·2²⁰ + frame)
     * id space — over the even-media half.
     */
-  private val frameStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String)]
-
-  private def frameState(s: SparkSession, d: String): (String, String) =
-    frameStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_frame_manifest_$tag"
-      val pt = s"graft_frame_pairs_$tag"
-      // fingerprints feed the manifest AND the pair list — decode once
-      val fp = graft.multimodal.MultimodalOps.frameFingerprints(
-        documentsAsMedia(s, d)
-          .where(pmod(col("media_id"), lit(2)) === 0), everyMs = 60000L)
-        .localCheckpoint(true)
-      graft.ops.ScaleOps.writeBucketed(
-        Dedup.hammingBandManifestOf(fp, maxHamming = 3)
-          .repartition(8, col("band"), col("bval")),
-        mt, Seq("band", "bval"), buckets = 8)
-      s.sql(s"DROP TABLE IF EXISTS $pt")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), pt)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, true)
-      Dedup.hammingPairsOf(fp, maxHamming = 3)
-        .write.mode("overwrite").saveAsTable(pt)
-      (mt, pt)
-    })
+  private val frameState = Memo("frame_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_frame_manifest_$tag"
+    val pt = s"graft_frame_pairs_$tag"
+    // fingerprints feed the manifest AND the pair list — decode once
+    val fp = graft.multimodal.MultimodalOps.frameFingerprints(
+      documentsAsMedia(s, d)
+        .where(pmod(col("media_id"), lit(2)) === 0), everyMs = 60000L)
+      .localCheckpoint(true)
+    graft.ops.ScaleOps.writeBucketed(
+      Dedup.hammingBandManifestOf(fp, maxHamming = 3)
+        .repartition(8, col("band"), col("bval")),
+      mt, Seq("band", "bval"), buckets = 8)
+    ScaleOps.dropTable(s, pt)
+    Dedup.hammingPairsOf(fp, maxHamming = 3)
+      .write.mode("overwrite").saveAsTable(pt)
+    (mt, pt)
+  }
 
   /** The WINNOWING tier's persisted state — the fifth dedup modality's
     * incremental layout, symmetric to [[neardupState]]: the even-half
@@ -1232,51 +1159,16 @@ object SparkEntry {
     * exact identity; see
     * [[graft.ops.CorpusOps.incrementalWinnowPairsOnState]]), and the
     * known pair list.
+    *
+    * @return (bucketed fingerprint-manifest table, frozen blocklist
+    *         table, known verified-pairs table)
     */
-  private val winnowStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String, String)]
-
-  /** @return (bucketed fingerprint-manifest table, frozen blocklist
-    *         table, known verified-pairs table) */
-  private def winnowState(s: SparkSession,
-                          d: String): (String, String, String) =
-    winnowStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_winnow_manifest_$tag"
-      val bt = s"graft_winnow_block_$tag"
-      val pt = s"graft_winnow_pairs_$tag"
-      val fps = CorpusOps.winnowFingerprints(
-        Tables.documents(s, d).where(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "text", k = 3, w = 4)
+  private val winnowState = Memo("winnow_state") { (s, d) =>
+    fingerprintState(s, d, "winnow") { docs =>
+      CorpusOps.winnowFingerprints(docs, "doc_id", "text", k = 3, w = 4)
         .select(col("doc_id").as("id"), col("fp_hash")).distinct()
-        .localCheckpoint(true)
-      Seq(bt, pt).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
-      fps.groupBy(col("fp_hash"))
-        .agg(countDistinct(col("id")).as("__df"))
-        .where(col("__df") > 50).select(col("fp_hash"))
-        .write.saveAsTable(bt)
-      ScaleOps.writeBucketed(
-        fps.join(s.table(bt), Seq("fp_hash"), "left_anti")
-          .repartition(8, col("fp_hash")),
-        mt, Seq("fp_hash"), buckets = 8)
-      val m = s.table(mt)
-      m.as("a").join(m.as("b"),
-          col("a.fp_hash") === col("b.fp_hash")
-            && col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .agg(count(lit(1)).as("shared_fp"))
-        .where(col("shared_fp") >= 2L)
-        .write.saveAsTable(pt)
-      Dedup.unpersistCheckpoint(fps)
-      (mt, bt, pt)
-    })
+    }
+  }
 
   /** The CDC chunk modality's persisted state — [[winnowState]]'s layout
     * with CDC chunk digests as the fingerprints (the state machinery is
@@ -1284,47 +1176,44 @@ object SparkEntry {
     * half, the FROZEN over-common blocklist derived from it, and the
     * read-back even-even pair list.
     */
-  private val cdcStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (String, String, String)]
+  private val cdcState = Memo("cdc_state") { (s, d) =>
+    fingerprintState(s, d, "cdc")(
+      CorpusOps.cdcFingerprints(_, "doc_id", "text"))
+  }
 
-  private def cdcState(s: SparkSession,
-                       d: String): (String, String, String) =
-    cdcStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val mt = s"graft_cdc_manifest_$tag"
-      val bt = s"graft_cdc_block_$tag"
-      val pt = s"graft_cdc_pairs_$tag"
-      val fps = CorpusOps.cdcFingerprints(
-        Tables.documents(s, d).where(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "text")
-        .localCheckpoint(true)
-      Seq(bt, pt).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
-      fps.groupBy(col("fp_hash"))
-        .agg(countDistinct(col("id")).as("__df"))
-        .where(col("__df") > 50).select(col("fp_hash"))
-        .write.saveAsTable(bt)
-      ScaleOps.writeBucketed(
-        fps.join(s.table(bt), Seq("fp_hash"), "left_anti")
-          .repartition(8, col("fp_hash")),
-        mt, Seq("fp_hash"), buckets = 8)
-      val m = s.table(mt)
-      m.as("a").join(m.as("b"),
-          col("a.fp_hash") === col("b.fp_hash")
-            && col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .agg(count(lit(1)).as("shared_fp"))
-        .where(col("shared_fp") >= 2L)
-        .write.saveAsTable(pt)
-      Dedup.unpersistCheckpoint(fps)
-      (mt, bt, pt)
-    })
+  /** The shared builder of the fingerprint-manifest states: `fingerprint`
+    * maps the even-id documents to (id, fp_hash) rows; the tables are
+    * named `graft_<prefix>_{manifest,block,pairs}_<dir tag>`.
+    */
+  private def fingerprintState(s: SparkSession, d: String, prefix: String)(
+      fingerprint: DataFrame => DataFrame): (String, String, String) = {
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val mt = s"graft_${prefix}_manifest_$tag"
+    val bt = s"graft_${prefix}_block_$tag"
+    val pt = s"graft_${prefix}_pairs_$tag"
+    val fps = fingerprint(
+      Tables.documents(s, d).where(pmod(col("doc_id"), lit(2)) === 0))
+      .localCheckpoint(true)
+    Seq(bt, pt).foreach(ScaleOps.dropTable(s, _))
+    fps.groupBy(col("fp_hash"))
+      .agg(countDistinct(col("id")).as("__df"))
+      .where(col("__df") > 50).select(col("fp_hash"))
+      .write.saveAsTable(bt)
+    ScaleOps.writeBucketed(
+      fps.join(s.table(bt), Seq("fp_hash"), "left_anti")
+        .repartition(8, col("fp_hash")),
+      mt, Seq("fp_hash"), buckets = 8)
+    val m = s.table(mt)
+    m.as("a").join(m.as("b"),
+        col("a.fp_hash") === col("b.fp_hash")
+          && col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("shared_fp"))
+      .where(col("shared_fp") >= 2L)
+      .write.saveAsTable(pt)
+    Dedup.unpersistCheckpoint(fps)
+    (mt, bt, pt)
+  }
 
   /** The ANN serving tier's persisted state, symmetric to the dedup
     * manifests: a codebook trained ONCE on the even-id half plus that
@@ -1334,30 +1223,19 @@ object SparkEntry {
     * moves, the existing corpus is never re-assigned) and serves from the
     * grown table.
     */
-  private val ivfPostingStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (Similarity.IvfCodebook, String)]
-
-  private def ivfPostingState(s: SparkSession,
-                              d: String): (Similarity.IvfCodebook, String) =
-    ivfPostingStateCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pt = s"graft_ivf_postings_$tag"
-      val existing = Tables.embeddings(s, d)
-        .where(pmod(col("vec_id"), lit(2)) === 0)
-      // the ivfCodebooks sampling discipline: a key-mod sample when it
-      // holds enough rows for a stable fit, the full half otherwise
-      val sample = existing.where(pmod(col("vec_id"), lit(5)) === 0
-        && col("vec_id") < 50000)
-      val train = if (sample.select("vec_id").take(160).length >= 160) sample
-        else existing
-      val cb = Similarity.trainCodebook(train, nlist = 16)
-      ScaleOps.writeBucketed(
-        Similarity.ivfAssign(existing, "vec_id", "embedding", cb)
-          .repartition(8, col("cell")),
-        pt, Seq("cell"), buckets = 8)
-      (cb, pt)
-    })
+  private val ivfPostingState = Memo("ivf_posting_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val pt = s"graft_ivf_postings_$tag"
+    val existing = Tables.embeddings(s, d)
+      .where(pmod(col("vec_id"), lit(2)) === 0)
+    val cb = Similarity.trainCodebook(codebookTrainingSet(existing),
+      nlist = 16)
+    ScaleOps.writeBucketed(
+      Similarity.ivfAssign(existing, "vec_id", "embedding", cb)
+        .repartition(8, col("cell")),
+      pt, Seq("cell"), buckets = 8)
+    (cb, pt)
+  }
 
   /** The governance chain's stage frames, memoized per (application,
     * dir): `corpus_prep_full` consumes the final gate while
@@ -1373,54 +1251,51 @@ object SparkEntry {
                                       excised: DataFrame, neardup: DataFrame,
                                       moss: DataFrame, clean: DataFrame)
 
-  private val corpusPrepCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      CorpusPrepFrames]
-
-  private def corpusPrepFrames(s: SparkSession,
-                               d: String): CorpusPrepFrames =
-    corpusPrepCache.getOrElseUpdate((s.sparkContext.applicationId, d), {
-      val all = Tables.documents(s, d)
-      val corpus = all
-        .where(pmod(col("doc_id"), lit(5)) === 0 && col("doc_id") < 20000)
-        .select(col("doc_id"), col("lang"),
-          TextFunctions.normalizeText(col("text")).as("norm"))
-      val evalSide = all.where(pmod(col("doc_id"), lit(10)) === 7)
-        .select(col("doc_id"),
-          TextFunctions.normalizeText(col("text")).as("text_dedup"))
-      // stage frames each feed TWO consumers (rule (g)): exact feeds the
-      // id/lang projection AND the excision pass; excised feeds the LSH
-      // pair proposal AND the drop join; neardup feeds the MOSS pair
-      // proposal AND its anti join; moss feeds decontamination AND the
-      // semi join — left lazy, each consumer re-runs the whole upstream
-      // chain from the scan
-      val exact = Dedup.dropExact(corpus, "doc_id", "norm")
-        .localCheckpoint(true)
-      val excised = exact.select(col("doc_id"), col("lang"))
-        .join(CorpusOps.exactSubstrDedup(exact, "doc_id", "norm", n = 15)
-          .select(col("doc_id"), col("text_dedup")), Seq("doc_id"))
-        .localCheckpoint(true)
-      val neardup = Dedup.dropNearDupsFromPairs(excised, "doc_id",
-        Dedup.verifiedNearDupPairs(excised, "doc_id", "text_dedup",
-          threshold = 0.8))
-        .localCheckpoint(true)
-      // MOSS-match removal: drop the LATER document of every winnowing
-      // match (earlier-survives, the canonical-keep convention) — the
-      // victim set is id-only, so the anti join ships ids, never text
-      val moss = neardup.join(
-        CorpusOps.winnowPairs(neardup, "doc_id", "text_dedup",
-            k = 3, w = 4, minShared = 1L, maxDocFreq = 50L)
-          .select(col("id_b").as("doc_id")),
-        Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      val clean = moss.join(
-        CorpusOps.decontaminate(moss, evalSide, "doc_id", "text_dedup",
-            n = 8)
-          .where(!col("contaminated")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      CorpusPrepFrames(corpus, exact, excised, neardup, moss, clean)
-    })
+  private val corpusPrepFrames = Memo.releasing[CorpusPrepFrames](
+    "corpus_prep_frames", Set("corpus_prep_attrition", "corpus_prep_full"),
+    fr => Seq(fr.exact, fr.excised, fr.neardup, fr.moss, fr.clean)
+      .foreach(Dedup.unpersistCheckpoint)) { (s, d) =>
+    val all = Tables.documents(s, d)
+    val corpus = all
+      .where(pmod(col("doc_id"), lit(5)) === 0 && col("doc_id") < 20000)
+      .select(col("doc_id"), col("lang"),
+        TextFunctions.normalizeText(col("text")).as("norm"))
+    val evalSide = all.where(pmod(col("doc_id"), lit(10)) === 7)
+      .select(col("doc_id"),
+        TextFunctions.normalizeText(col("text")).as("text_dedup"))
+    // stage frames each feed TWO consumers (rule (g)): exact feeds the
+    // id/lang projection AND the excision pass; excised feeds the LSH
+    // pair proposal AND the drop join; neardup feeds the MOSS pair
+    // proposal AND its anti join; moss feeds decontamination AND the
+    // semi join — left lazy, each consumer re-runs the whole upstream
+    // chain from the scan
+    val exact = Dedup.dropExact(corpus, "doc_id", "norm")
+      .localCheckpoint(true)
+    val excised = exact.select(col("doc_id"), col("lang"))
+      .join(CorpusOps.exactSubstrDedup(exact, "doc_id", "norm", n = 15)
+        .select(col("doc_id"), col("text_dedup")), Seq("doc_id"))
+      .localCheckpoint(true)
+    val neardup = Dedup.dropNearDupsFromPairs(excised, "doc_id",
+      Dedup.verifiedNearDupPairs(excised, "doc_id", "text_dedup",
+        threshold = 0.8))
+      .localCheckpoint(true)
+    // MOSS-match removal: drop the LATER document of every winnowing
+    // match (earlier-survives, the canonical-keep convention) — the
+    // victim set is id-only, so the anti join ships ids, never text
+    val moss = neardup.join(
+      CorpusOps.winnowPairs(neardup, "doc_id", "text_dedup",
+          k = 3, w = 4, minShared = 1L, maxDocFreq = 50L)
+        .select(col("id_b").as("doc_id")),
+      Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
+    val clean = moss.join(
+      CorpusOps.decontaminate(moss, evalSide, "doc_id", "text_dedup",
+          n = 8)
+        .where(!col("contaminated")).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+      .localCheckpoint(true)
+    CorpusPrepFrames(corpus, exact, excised, neardup, moss, clean)
+  }
 
   /** The ADC tier's persisted serving state — [[ivfPostingState]] one
     * compression level up: a frozen [[EmbeddingOps.IvfadcModel]] (coarse
@@ -1430,32 +1305,25 @@ object SparkEntry {
     * pass over the batch alone; codes are a property of the model, so
     * append == full re-encode as an exact set identity.
     */
-  private val ivfadcPostingStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (EmbeddingOps.IvfadcModel, String)]
-
-  private def ivfadcPostingState(s: SparkSession, d: String)
-      : (EmbeddingOps.IvfadcModel, String) =
-    ivfadcPostingStateCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, d), {
-        val tag = java.lang.Integer.toHexString(d.hashCode)
-        val pt = s"graft_ivfadc_postings_$tag"
-        val existing = Tables.embeddings(s, d)
-          .where(pmod(col("vec_id"), lit(2)) === 0)
-        // m=8 × k=16 (32 bits/vector), DOUBLE knn_ivfadc_topk's m=4×k=8:
-        // a codebook that never saw the appended half needs the extra
-        // capacity (measured: 12-bit codes bottom at 0.1 recall on the
-        // grown sf0.1 table even probing 5/8 cells; 32-bit + R=100
-        // re-rank reads 0.6+) — the "model size is a choice" lever
-        // pulled in the direction a frozen-codebook service pulls it
-        val model = EmbeddingOps.ivfadcTrain(existing, "vec_id",
-          "embedding", dim = 64, nlist = 8, m = 8, k = 16, iterations = 3)
-        ScaleOps.writeBucketed(
-          EmbeddingOps.ivfadcEncode(existing, "vec_id", "embedding", model)
-            .repartition(8, col("cell")),
-          pt, Seq("cell"), buckets = 8)
-        (model, pt)
-      })
+  private val ivfadcPostingState = Memo("ivfadc_posting_state") { (s, d) =>
+    val tag = java.lang.Integer.toHexString(d.hashCode)
+    val pt = s"graft_ivfadc_postings_$tag"
+    val existing = Tables.embeddings(s, d)
+      .where(pmod(col("vec_id"), lit(2)) === 0)
+    // m=8 × k=16 (32 bits/vector), DOUBLE knn_ivfadc_topk's m=4×k=8:
+    // a codebook that never saw the appended half needs the extra
+    // capacity (measured: 12-bit codes bottom at 0.1 recall on the
+    // grown sf0.1 table even probing 5/8 cells; 32-bit + R=100
+    // re-rank reads 0.6+) — the "model size is a choice" lever
+    // pulled in the direction a frozen-codebook service pulls it
+    val model = EmbeddingOps.ivfadcTrain(existing, "vec_id",
+      "embedding", dim = 64, nlist = 8, m = 8, k = 16, iterations = 3)
+    ScaleOps.writeBucketed(
+      EmbeddingOps.ivfadcEncode(existing, "vec_id", "embedding", model)
+        .repartition(8, col("cell")),
+      pt, Seq("cell"), buckets = 8)
+    (model, pt)
+  }
 
   /** Events staged once per dir as a HIVE-PARTITIONED parquet layout
     * (`partitionBy(event_type)`) — the fixture for the graded
@@ -1463,17 +1331,12 @@ object SparkEntry {
     * reach the scan as a PartitionFilter (directories never listed),
     * which PlanSpec pins. Disk artifact, memoized like [[stagedEvents]].
     */
-  private val partitionedEventDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def partitionedEvents(s: SparkSession, d: String): String =
-    partitionedEventDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-events-part").toString
+  private val partitionedEvents = Memo("partitioned_events") { (s, d) =>
+    staged("graft-events-part") { dir =>
       Tables.events(s, d).write.mode("overwrite")
         .partitionBy("event_type").parquet(dir)
-      dir
-    })
+    }
+  }
 
   /** Orders deliberately fragmented into 64 small files, then compacted by
     * [[ScaleOps.compactParquet]] — the write-path fixture the
@@ -1481,20 +1344,12 @@ object SparkEntry {
     * preserves CONTENT while fixing layout). Disk artifact, memoized per
     * dir like [[stagedEvents]].
     */
-  private val compactedOrderDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def compactedOrders(s: SparkSession, d: String): String =
-    compactedOrderDirs.getOrElseUpdate(d, {
-      val frag = java.nio.file.Files
-        .createTempDirectory("graft-orders-frag").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-orders-compact").toString
-      Tables.orders(s, d).repartition(64).write.mode("overwrite").parquet(frag)
-      ScaleOps.compactParquet(s, frag, out, targetMb = 128,
-        sortCol = Some("o_orderdate"))
-      out
-    })
+  private val compactedOrders = Memo("compacted_orders") { (s, d) =>
+    val frag = staged("graft-orders-frag")(
+      Tables.orders(s, d).repartition(64).write.mode("overwrite").parquet)
+    staged("graft-orders-compact")(ScaleOps.compactParquet(s, frag, _,
+      targetMb = 128, sortCol = Some("o_orderdate")))
+  }
 
   /** Verified near-dup pairs for the graded dedup slice, computed ONCE per
     * sfDir at the LOOSEST graded threshold (0.5) and localCheckpointed:
@@ -1505,18 +1360,17 @@ object SparkEntry {
     * expensive half of both queries (the other half is the iterative
     * connected-components loop), and before this cache each query rebuilt
     * it from the scan up on every run. Same JVM-lifetime memoization
-    * contract as [[ivfCodebooks]]; keyed by (application, dir) because a
+    * contract as [[ivfCodebook]]; keyed by (application, dir) because a
     * checkpointed frame is context-bound.
     */
-  private val verifiedPairCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def gradedVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    verifiedPairCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      Dedup.verifiedNearDupPairs(
-        Tables.documents(s, d).where(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", threshold = 0.5)
-        .localCheckpoint(true))
+  private val gradedVerifiedPairs = Memo.releasing("verified_pairs",
+    Set("dedup_groups", "dedup_keep_best", "dedup_keep_canonical",
+      "neardup_safe_split"), Dedup.unpersistCheckpoint) { (s, d) =>
+    Dedup.verifiedNearDupPairs(
+      Tables.documents(s, d).where(pmod(col("doc_id"), lit(10)) === 0),
+      "doc_id", "text", threshold = 0.5)
+      .localCheckpoint(true)
+  }
 
   /** The corpus char-trigram NLL scores, memoized: `ngram_lm_score`
     * grades them directly and `perplexity_buckets` stratifies on them —
@@ -1524,13 +1378,12 @@ object SparkEntry {
     * once per (application, dir). Checkpointed: doc-scale (id, n_tri,
     * avg_nll) rows only.
     */
-  private val trigramNllCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def gradedTrigramNll(s: SparkSession, d: String): DataFrame =
-    trigramNllCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      CorpusOps.charTrigramNll(Tables.documents(s, d), "doc_id", "text")
-        .localCheckpoint(true))
+  private val gradedTrigramNll = Memo.releasing("trigram_nll",
+    Set("ngram_lm_score", "perplexity_buckets"),
+    Dedup.unpersistCheckpoint) { (s, d) =>
+    CorpusOps.charTrigramNll(Tables.documents(s, d), "doc_id", "text")
+      .localCheckpoint(true)
+  }
 
   /** The 4-round LPA labels over the co-purchase graph, memoized: both
     * `label_propagation` and `community_modularity` consume the same
@@ -1538,116 +1391,40 @@ object SparkEntry {
     * the loop's final generation), so the memo stores node-scale state
     * only. Same (application, dir) keying as the other memo families.
     */
-  private val lpaLabelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaLabelCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      GraphOps.labelPropagationOf(basketGraph(s, d)._2, iters = 4))
+  private val lpaLabels = Memo("lpa_labels",
+    Set("label_propagation", "community_modularity")) { (s, d) =>
+    GraphOps.labelPropagationOf(basketGraph(s, d)._2, iters = 4)
+  }
 
   /** The 2×3 random-walk corpus, memoized: `random_walks` grades it and
     * `skipgram_pairs` consumes it — the walk generations are already
     * checkpointed inside [[GraphOps.randomWalks]], so the memo holds
     * walk-scale state only.
     */
-  private val walkCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val gradedWalks = Memo("walk_corpus",
+    Set("random_walks", "skipgram_pairs")) { (s, d) =>
+    GraphOps.randomWalks(basketGraph(s, d)._2, walkLen = 3, walksPerNode = 2)
+  }
 
-  private def gradedWalks(s: SparkSession, d: String): DataFrame =
-    walkCache.getOrElseUpdate((s.sparkContext.applicationId, d),
-      GraphOps.randomWalks(basketGraph(s, d)._2, walkLen = 3,
-        walksPerNode = 2))
-
-  /** The heavy JVM-lifetime memo families (localCheckpointed frames held
-    * by strong TrieMap references) with the graded queries that consume
-    * each — the map Bench needs to EVICT a family once its last consumer
-    * (in Bench's sorted execution order) has been timed. Holding every
-    * family for the whole 140+-query run kept hundreds of MB of dead
-    * checkpoint blocks resident, squeezing the execution memory (and GC
-    * headroom) of every later heavy query — the shared-JVM inflation the
-    * round-7 adjudication still measured at 2× on the heaviest query.
-    * The evictor only drops the strong references; the blocks themselves
-    * are reclaimed when the next driver GC feeds the ContextCleaner's
-    * weak-reference queue (Bench runs one GC per query). KB-scale memos
-    * (IVF codebooks, eval blooms) and on-disk staging dirs are deliberately
-    * absent: evicting them buys nothing and re-deriving them is not free.
+  /** The heavy JVM-lifetime memo families — every [[Memo]] declared
+    * above with graded consumers — as (family, consumers, evictor): the
+    * map Bench needs to EVICT a family once its last consumer (in Bench's
+    * sorted execution order) has been timed. Holding every family for the
+    * whole 140+-query run kept hundreds of MB of dead checkpoint blocks
+    * resident, squeezing the execution memory (and GC headroom) of every
+    * later heavy query — the shared-JVM inflation the round-7
+    * adjudication still measured at 2× on the heaviest query. The evictor
+    * runs the memo's `release` (families that declare one unpersist their
+    * checkpoint blocks explicitly) and drops the strong references; other
+    * families' blocks are reclaimed when the next driver GC feeds the
+    * ContextCleaner's weak-reference queue (Bench runs one GC per query).
+    * KB-scale memos (IVF codebooks, eval blooms) and on-disk staging dirs
+    * declare no consumers: evicting them buys nothing and re-deriving
+    * them is not free.
     */
-  def memoFamilies: Seq[(String, Set[String], () => Unit)] = Seq(
-    ("basket_graph",
-      Set("copurchase_lift", "triangle_count", "link_predict",
-        "pagerank_parts", "k_core_parts", "k_truss_parts",
-        "bfs_hops_parts", "connected_components", "label_propagation",
-        "community_modularity", "negative_edges", "random_walks",
-        "skipgram_pairs"),
-      () => basketGraphCache.clear()),
-    ("link_adj",
-      Set("link_predict"),
-      () => linkAdjCache.clear()),
-    ("basket_triangles",
-      Set("triangle_count", "k_truss_parts"),
-      () => {
-        basketTriCache.values.foreach(Dedup.unpersistCheckpoint)
-        basketTriCache.clear()
-      }),
-    ("verified_pairs",
-      Set("dedup_groups", "dedup_keep_best", "dedup_keep_canonical",
-        "neardup_safe_split"),
-      () => {
-        verifiedPairCache.values.foreach(Dedup.unpersistCheckpoint)
-        verifiedPairCache.clear()
-      }),
-    ("lpa_labels",
-      Set("label_propagation", "community_modularity"),
-      () => lpaLabelCache.clear()),
-    ("walk_corpus",
-      Set("random_walks", "skipgram_pairs"),
-      () => walkCache.clear()),
-    // the checkpointed-frame families unpersist their blocks EXPLICITLY
-    // before dropping the strong reference (the bpe_model discipline) —
-    // clear() alone leaves reclamation to the next GC's ContextCleaner
-    // sweep, leaking block-manager storage for the whole interval on
-    // every invalidation cycle
-    ("trigram_nll",
-      Set("ngram_lm_score", "perplexity_buckets"),
-      () => {
-        trigramNllCache.values.foreach(Dedup.unpersistCheckpoint)
-        trigramNllCache.clear()
-      }),
-    ("corpus_prep_frames",
-      Set("corpus_prep_attrition", "corpus_prep_full"),
-      () => {
-        corpusPrepCache.values.foreach { fr =>
-          Seq(fr.exact, fr.excised, fr.neardup, fr.moss, fr.clean)
-            .foreach(Dedup.unpersistCheckpoint)
-        }
-        corpusPrepCache.clear()
-      }),
-    ("cosine_truth",
-      Set("incremental_cosine_persisted", "stream_cosine_incremental"),
-      () => {
-        cosineTruthCache.values.foreach { case (t, f) =>
-          Dedup.unpersistCheckpoint(t); Dedup.unpersistCheckpoint(f)
-        }
-        cosineTruthCache.clear()
-      }),
-    ("bpe_model",
-      Set("bpe_encode_stats", "bpe_encode_ids", "bpe_pack_ids",
-        "bpe_decode_roundtrip", "bpe_pack_report"),
-      () => {
-        bpeModels.values.foreach { m =>
-          Dedup.unpersistCheckpoint(m.merges)
-          Dedup.unpersistCheckpoint(m.vocab)
-          Dedup.unpersistCheckpoint(m.baseChars)
-        }
-        bpeModels.clear()
-      }),
-    ("bpe_encoded",
-      Set("bpe_encode_ids", "bpe_pack_ids", "bpe_decode_roundtrip",
-        "bpe_pack_report"),
-      () => {
-        bpeEncodedCache.values.foreach(Dedup.unpersistCheckpoint)
-        bpeEncodedCache.clear()
-      }))
+  def memoFamilies: Seq[(String, Set[String], () => Unit)] =
+    memoRegistry.all.filter(_.consumers.nonEmpty)
+      .map(m => (m.family, m.consumers, () => m.evict()))
 
   /** Drive a finite streaming frame to completion through a memory sink
     * and hand back the result as a batch frame. `processAllAvailable`
@@ -1672,13 +1449,7 @@ object SparkEntry {
   private def materializeAndDropTables(s: SparkSession, df: DataFrame,
                                        tables: String*): DataFrame = {
     val out = df.localCheckpoint(true)
-    tables.foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(loc, true)
-    }
+    tables.foreach(ScaleOps.dropTable(s, _))
     out
   }
 
@@ -1731,16 +1502,6 @@ object SparkEntry {
     try q.processAllAvailable() finally q.stop()
     s.table(qn)
   }
-
-  private def ivfCodebook(s: SparkSession, d: String): Similarity.IvfCodebook =
-    ivfCodebooks.getOrElseUpdate(d, {
-      val e = Tables.embeddings(s, d)
-      val sample = e.where(pmod(col("vec_id"), lit(5)) === 0
-        && col("vec_id") < 50000)
-      val train = if (sample.select("vec_id").take(160).length >= 160) sample
-        else e
-      Similarity.trainCodebook(train, nlist = 16)
-    })
 
   /** Clustered-synthetic embedding corpus, derived deterministically
     * FROM the fixture (no new data): member i sits at center (i mod 50)
@@ -4270,13 +4031,7 @@ object SparkEntry {
       // Drop stale same-name leftovers first — the run counter restarts
       // per JVM while the warehouse persists across them (the
       // neardupState discipline).
-      Seq(corpusS, outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      Seq(corpusS, outS).foreach(ScaleOps.dropTable(s, _))
       // the working manifest keeps the persisted table's (band, bucket)
       // bucket layout — seeded bucketed and grown bucketed, so every
       // micro-batch probe reads the GROWING manifest exchange-free like
@@ -4412,13 +4167,7 @@ object SparkEntry {
       val run = streamRuns.incrementAndGet()
       val mtS = s"graft_stream_sh_manifest_$run"
       val outS = s"graft_stream_sh_pairs_$run"
-      Seq(outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      ScaleOps.dropTable(s, outS)
       // seed + grow the working manifest BUCKETED on (band, bval) — the
       // persisted table's layout — so each micro-batch probe reads the
       // growing manifest exchange-free (the batch-persisted variant's
@@ -4707,13 +4456,7 @@ object SparkEntry {
       val run = streamRuns.incrementAndGet()
       val mtS = s"graft_stream_fr_manifest_$run"
       val outS = s"graft_stream_fr_pairs_$run"
-      Seq(outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      ScaleOps.dropTable(s, outS)
       // working manifest seeded + grown BUCKETED on (band, bval) — the
       // persisted table's layout, so every probe reads the growing
       // manifest exchange-free; writeBucketed drops stale state
@@ -5541,13 +5284,7 @@ object SparkEntry {
       val mtS = s"graft_stream_cos_manifest_$run"
       val corpusS = s"graft_stream_cos_corpus_$run"
       val outS = s"graft_stream_cos_pairs_$run"
-      Seq(corpusS, outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      Seq(corpusS, outS).foreach(ScaleOps.dropTable(s, _))
       // seed + grow the working manifest BUCKETED on (tbl, bkt) — the
       // persisted SRP table's layout — so each micro-batch probe reads
       // the growing manifest exchange-free (the batch-persisted
@@ -6128,13 +5865,7 @@ object SparkEntry {
       val run = streamRuns.incrementAndGet()
       val mtS = s"graft_stream_wn_manifest_$run"
       val outS = s"graft_stream_wn_pairs_$run"
-      Seq(outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      ScaleOps.dropTable(s, outS)
       ScaleOps.writeBucketed(
         s.table(mt).repartition(8, col("fp_hash")),
         mtS, Seq("fp_hash"), buckets = 8)
@@ -6205,13 +5936,7 @@ object SparkEntry {
       val run = streamRuns.incrementAndGet()
       val mtS = s"graft_stream_cdc_manifest_$run"
       val outS = s"graft_stream_cdc_pairs_$run"
-      Seq(outS).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(loc, true)
-      }
+      ScaleOps.dropTable(s, outS)
       ScaleOps.writeBucketed(
         s.table(mt).repartition(8, col("fp_hash")),
         mtS, Seq("fp_hash"), buckets = 8)

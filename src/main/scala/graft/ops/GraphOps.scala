@@ -377,10 +377,12 @@ object GraphOps {
     * 80 MB of cached edge blocks (~1.5 M edges), far below the raw
     * 20 M-row cap this replaces, and it scales with the session's own
     * broadcast sizing instead of ignoring it. A disabled auto-broadcast
-    * threshold (≤ 0) disables this probe too.
+    * threshold (≤ 0) disables this probe too, and so do zero bytes: a
+    * checkpoint whose blocks were freed (or never cached) reads 0, which
+    * means "size unknown", not "free to ship".
     */
-  private def closingProbe(oriented: DataFrame,
-                           thresholdMultiple: Long = 8L): DataFrame = {
+  private[ops] def closingProbe(oriented: DataFrame,
+                                thresholdMultiple: Long = 8L): DataFrame = {
     val spark = oriented.sparkSession
     val probe = oriented.select(col("src").as("b"), col("dst").as("c"))
     val budget = thresholdMultiple * org.apache.spark.network.util.JavaUtils
@@ -396,29 +398,9 @@ object GraphOps {
     val bytes = spark.sparkContext.getRDDStorageInfo
       .filter(i => rddIds.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
-    if (budget > 0 && rddIds.nonEmpty && bytes <= budget) broadcast(probe)
+    if (budget > 0 && bytes > 0 && bytes <= budget) broadcast(probe)
     else probe
   }
-
-  /** Rows of a wave-scale frame collected to the driver when they fit
-    * `cap`, else None: one count job decides (the same count the
-    * checkpointed spelling pays anyway), one collect delivers — never a
-    * `limit()`, whose escalating partition sweep (1, 4, 16, … — each
-    * round a separate job) measurably COSTS more jobs than it saves on
-    * multi-partition frames. The LOCAL representation is what makes a
-    * tiny peel wave cheap — a LocalRelation re-consumes, filters, and
-    * BROADCASTS with zero further Spark jobs (a BroadcastExchange over
-    * a LocalTableScan collects driver-side), so the per-wave fixed cost
-    * drops from ~a dozen scheduled jobs (checkpoints + counts +
-    * broadcast materializations) to the genuinely distributed passes.
-    * Call it on cheap-to-re-execute plans (filters over a checkpoint) —
-    * the two jobs each run the plan once. Driver posture: the wave
-    * BROADCAST decision already collects up to `broadcastRem` rows to
-    * the driver, so a cap at or below it adds no new memory class.
-    */
-  private def tryCollectLocal(df: DataFrame, cap: Long)
-    : Option[Array[org.apache.spark.sql.Row]] =
-    if (df.count() <= cap) Some(df.collect()) else None
 
   /** Run `f` with adaptive execution OFF (set/restore — the
     * runStreamToTable bracket discipline). For a PROVABLY wave-bounded
@@ -439,8 +421,9 @@ object GraphOps {
     try f finally spark.conf.set(key, before)
   }
 
-  /** A LocalRelation-backed frame over driver-held rows (zero-job
-    * consumption — see [[tryCollectLocal]]). */
+  /** A LocalRelation-backed frame over driver-held rows: it re-consumes,
+    * filters, and BROADCASTS with zero further Spark jobs (a
+    * BroadcastExchange over a LocalTableScan collects driver-side). */
   private def localDf(spark: org.apache.spark.sql.SparkSession,
                       rows: Array[org.apache.spark.sql.Row],
                       schema: org.apache.spark.sql.types.StructType)
@@ -761,7 +744,7 @@ object GraphOps {
     // overhead — the heavy enumeration re-widens inside edgeSupports.
     //
     // The accumulators and the frontier live DRIVER-LOCAL whenever they
-    // fit `driverWaveCap` ([[tryCollectLocal]] — at or below the row
+    // fit `driverWaveCap` ([[localDf]] — at or below the row
     // count the wave broadcast already collects to the driver): a tail
     // wave's fixed cost was ~a dozen scheduled jobs (five eager
     // checkpoints, a count, and several broadcast materializations of

@@ -287,18 +287,28 @@ object ScaleOps {
     * safe at 100 TB (a static-mode overwrite would wipe the WHOLE
     * directory on every retry).
     *
-    * The overwrite mode is set for this write only and restored —
-    * partitionOverwriteMode is session-wide state a library must not
-    * leak into its caller's other writes.
+    * The dynamic overwrite mode is a per-write option, so the
+    * session-wide `spark.sql.sources.partitionOverwriteMode` — state a
+    * library must not touch — never changes.
     */
   def backfillPartitions(df: DataFrame, dir: String,
-                         partCol: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val before = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally spark.conf.set(key, before)
+                         partCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(dir)
+
+  /** Drop a warehouse table AND its directory. Overwrite must win even
+    * when only the DIRECTORY survived: a fresh session's in-memory catalog
+    * has no entry for the name, but the warehouse directory outlives the
+    * previous JVM, and saveAsTable's create path refuses an occupied
+    * location (LOCATION_ALREADY_EXISTS — mode=overwrite only helps when
+    * the catalog knows the table). Drop both halves of any stale state
+    * before writing.
+    */
+  def dropTable(s: SparkSession, table: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
   /** Bucketed co-located join setup: write both sides bucketed by the join
@@ -317,17 +327,7 @@ object ScaleOps {
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                     buckets: Int): Unit = {
     require(bucketCols.nonEmpty, "writeBucketed needs at least one column")
-    // Overwrite must win even when only the DIRECTORY survived: a fresh
-    // session's in-memory catalog has no entry for the name, but the
-    // warehouse directory outlives the previous JVM, and saveAsTable's
-    // create path refuses an occupied location (LOCATION_ALREADY_EXISTS —
-    // mode=overwrite only helps when the catalog knows the table). Drop
-    // both halves of any stale state before writing.
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    dropTable(df.sparkSession, table)
     df.write.mode("overwrite")
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)

@@ -414,4 +414,19 @@ class GraphOpsSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(all === Seq((1L, 6L, 7L, 14L, 0.0)))
   }
+
+  test("closingProbe: broadcasts a cached oriented list, never a freed one") {
+    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+      GraphOps.closingProbe(df).queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+          if h.hints.strategy.contains(
+            org.apache.spark.sql.catalyst.plans.logical.BROADCAST) => h
+      }.nonEmpty
+    val oriented = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
+      .localCheckpoint(true)
+    assert(hinted(oriented))
+    // freed blocks read 0 bytes: size unknown, so no broadcast
+    Dedup.unpersistCheckpoint(oriented)
+    assert(!hinted(oriented))
+  }
 }

@@ -468,4 +468,26 @@ class ScaleOpsSpec extends SparkTestBase {
     // (y 0..7), none prunable on x
     assert(lin === ((4L, 256L, 2L, 128L, 2L, 64L, 0.5)))
   }
+
+  test("backfillPartitions: replaces one partition, leaves the other's bytes and the session conf alone") {
+    val dir = java.nio.file.Files.createTempDirectory("backfill-spec")
+    Seq((1L, "a"), (2L, "b")).toDF("p", "v")
+      .write.mode("overwrite").partitionBy("p").parquet(dir.toString)
+    def files(part: String): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.list(dir.resolve(part)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(f => f.getFileName.toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    }
+    val untouched = files("p=2")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val confBefore = spark.conf.getAll.get(key)
+    ScaleOps.backfillPartitions(Seq((1L, "a2")).toDF("p", "v"),
+      dir.toString, "p")
+    assert(spark.conf.getAll.get(key) === confBefore)
+    assert(files("p=2") === untouched)
+    assert(spark.read.parquet(dir.toString).as[(String, Long)].collect()
+      .sortBy(_._2).toSeq === Seq(("a2", 1L), ("b", 2L)))
+  }
 }
