@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Rolling
 import graft.sources.{HttpFetcher, Sinks}
@@ -65,15 +68,24 @@ object HousingEtlMain {
 
   /** The full daily run, sinks injected for testability: fetch through the
     * landing zone (retried HTTP for URLs, file copy for local paths), run
-    * the pipeline, always write local CSV artifacts, and unless
-    * `--no-upload` push the report tabs and optionally the windows table
-    * to the warehouse sink — the reference's upload block
-    * (etl_main.py:365-385).
+    * the pipeline, always write local CSV artifacts (to `artifacts(outDir)`,
+    * CSV files by default), and unless `--no-upload` push the report tabs
+    * and optionally the windows table to the warehouse sink — the
+    * reference's upload block (etl_main.py:365-385). Logs the QA report
+    * after the artifacts and one `timing:` line of per-stage wall seconds
+    * after the pushes.
     */
   def runCli(spark: SparkSession, cfg: Config,
              push: Sinks.ReportSink,
              warehouse: String => Sinks.ReportSink,
-             log: String => Unit = HousingEtl.defaultLog): HousingEtl.Outputs = {
+             log: String => Unit = HousingEtl.defaultLog,
+             artifacts: String => Sinks.ReportSink = new Sinks.CsvDirSink(_))
+      : HousingEtl.Outputs = {
+    val timings = mutable.ArrayBuffer.empty[(String, Double)]
+    def timed[T](stage: String)(body: => T): T = {
+      val t0 = System.nanoTime
+      try body finally timings += stage -> (System.nanoTime - t0) / 1e9
+    }
     // Scheme match is case-insensitive (RFC 3986; python-requests — the
     // reference's client — accepts HTTPS://...), else an uppercase-scheme
     // URL would be treated as a local file path and die in Files.copy.
@@ -85,27 +97,27 @@ object HousingEtlMain {
         dest => Files.copy(Paths.get(cfg.input), dest,
           StandardCopyOption.REPLACE_EXISTING)
     val zone = new Sinks.LandingZone(cfg.cacheDir)
-    val raw = zone.fetch(fetcher, force = cfg.forceDownload)
+    val raw = timed("fetch")(zone.fetch(fetcher, force = cfg.forceDownload))
 
-    val out = HousingEtl.run(spark, raw.toString, cfg.lookup,
-      windows = cfg.windows, log = log)
+    val out = timed("plan")(HousingEtl.run(spark, raw.toString, cfg.lookup,
+      windows = cfg.windows, log = log))
 
-    // Cache the shared report frames across the export surface: weekly and
-    // windows feed up to 6 sinks each (CSV artifact + pushes + the
-    // anomalies/snapshot lineages that embed the windows plan — Spark's
-    // cache manager substitutes a cached plan into any query containing it
-    // as a subtree), and qa is also collected for the report log. Without
-    // these, every sink re-executes the whole CSV-scan → aggregate
-    // lineage from scratch.
-    out.weekly.persist()
-    out.windows.persist()
-    out.qa.persist()
+    // Every output is built from one parse of the CSV (out.shared: the
+    // enriched parse, then the unsorted weekly stats), and each report tab
+    // is read by its artifact write and again by its push. Persisting the
+    // shared frames first, then the tabs in dependency order, lets the
+    // cache manager substitute each cached plan into every later plan that
+    // contains it, so the CSV is scanned once and no tab is computed
+    // twice, including while the artifact writes run concurrently.
+    val cached = out.shared ++ HousingEtl.artifactTabs(out).map(_._2)
+    cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      HousingEtl.writeArtifacts(out, new Sinks.CsvDirSink(cfg.outDir))
       // The QA report the reference logs after its transform (coverage at
       // etl_main.py:196, summary metrics at 344-350) — emitted once the
-      // artifacts are safely on disk; a 1-row collect of a report table.
-      val qaRow = out.qa.collect().head
+      // artifacts are safely on disk; writeArtifacts collects the 1-row
+      // report alongside them.
+      val qaRow = timed("artifacts")(
+        HousingEtl.writeArtifacts(out, artifacts(cfg.outDir)))
       log(s"qa: rows_raw=${qaRow.getAs[Long]("rows_raw")} " +
         s"dims=${qaRow.getAs[Long]("dims")} " +
         s"coverage_pct=${qaRow.getAs[Double]("coverage_pct")} " +
@@ -118,34 +130,36 @@ object HousingEtlMain {
       // they are the system of record, and they were written before any push
       // was attempted, so nothing is lost when a push dies.
       if (!cfg.noUpload) {
+        def pushTab(tab: String, df: DataFrame): Unit =
+          timed(s"push:$tab")(push.write(tab, df))
         try {
-          push.write("weekly_by_la", out.weekly)
-          push.write("windows", out.windows)
-          push.write("latest", out.snapshot)
-          push.write("anomalies", out.anomalies)
-          out.typeBreakdown.foreach(push.write("type_breakdown", _))
-          push.write("qa", out.qa)
+          pushTab("weekly_by_la", out.weekly)
+          pushTab("windows", out.windows)
+          pushTab("latest", out.snapshot)
+          pushTab("anomalies", out.anomalies)
+          out.typeBreakdown.foreach(pushTab("type_breakdown", _))
+          pushTab("qa", out.qa)
         } catch {
           case scala.util.control.NonFatal(e) =>
             log(s"push sink failed (continuing): $e")
         }
         cfg.bqTable.foreach { t =>
-          try warehouse(t).write("windows", out.windows)
+          try timed(s"warehouse:$t")(warehouse(t).write("windows", out.windows))
           catch {
             case scala.util.control.NonFatal(e) =>
               log(s"warehouse sink failed for $t (continuing): $e")
           }
         }
       }
+      log("timing: " + timings.map { case (stage, s) =>
+        s"$stage=${"%.3f".formatLocal(java.util.Locale.ROOT, s)}s"
+      }.mkString(" "))
     } finally {
       // in a finally, after the push block: the tabs are read again up
-      // there (unpersisting earlier would re-run the shared lineages for
-      // them), and a throw from writeArtifacts / the qa collect / a
-      // non-NonFatal push error must not leak the cached plans for the
-      // life of a long-lived driver's SparkSession
-      out.weekly.unpersist()
-      out.windows.unpersist()
-      out.qa.unpersist()
+      // there (unpersisting earlier would recompute them), and a throw from
+      // writeArtifacts or a non-NonFatal push error must not leak the
+      // cached plans for the life of a long-lived application's session
+      cached.foreach(_.unpersist())
     }
     out
   }

@@ -70,12 +70,17 @@ object CsvSniffSource {
   }
 
   /** Normalization projection onto the canonical schema (SURVEY.md §1.3):
-    * coerced `date` (invalid rows dropped), coerced `price`, normalized
-    * `postcode` (null column when absent), `transaction_id` (source column
-    * or synthetic — P4), optional normalized `prop_type`.
+    * coerced `date`, coerced `price`, normalized `postcode` (null column
+    * when absent), `transaction_id` (source column or synthetic — P4),
+    * optional normalized `prop_type`, and no other source column.
+    *
+    * A `date` that does not parse is null, but its row stays: this frame is
+    * the raw parse, counted as-is for QA's `rows_raw`, and callers drop the
+    * invalid-date rows (P3) from it. One frame serves both, so a run that
+    * caches it scans the CSV once.
     */
   def toCanonical(df: DataFrame, rc: ResolvedColumns): DataFrame = {
-    val withDate = CoreOps.parseDateAndDrop(df, rc.date, "date")
+    val withDate = df.withColumn("date", CoreOps.coerceTimestamp(col(rc.date)))
     val withId = rc.id match {
       case Some(c) => withDate.withColumn("transaction_id", col(c).cast("string"))
       case None => CoreOps.withSyntheticId(withDate, "transaction_id")
@@ -85,13 +90,12 @@ object CsvSniffSource {
       case Some(c) => CoreOps.normalizeKey(col(c))
       case None => lit(null).cast("string")
     }
-    val base = withId
+    withId
       .withColumn("price", CoreOps.coerceDouble(col(rc.price)))
       .withColumn("postcode", pc)
-    rc.propType match {
-      case Some(c) => base.withColumn("prop_type", CoreOps.normalizeCategory(col(c)))
-      case None => base
-    }
+      .select((Seq(col("date"), col("transaction_id"), col("price"),
+        col("postcode")) ++ rc.propType.map(c =>
+          CoreOps.normalizeCategory(col(c)).as("prop_type"))): _*)
   }
 
   /** S5 — lookup CSV, all-string (matches pandas dtype=str read at

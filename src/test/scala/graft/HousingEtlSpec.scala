@@ -2,6 +2,18 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.collection.mutable
+
+import org.apache.spark.GraftTestAccess
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.functions.{lit, raise_error}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.sources.{CsvSniffSource, Sinks}
 
 /** End-to-end pipeline tests over the reference-shaped fixture corpus
@@ -268,6 +280,159 @@ class HousingEtlSpec extends SparkTestBase {
       .collect().head.getAs[Long]("rows_raw") == 5L)
     assert(HousingEtlMain.runCli(spark, cfg2.copy(forceDownload = true),
       nop, _ => nop).qa.collect().head.getAs[Long]("rows_raw") == 6L)
+  }
+
+  // A daily-run input big enough to give the weekly, window and anomaly
+  // tabs real content: 3,000 rows over 40 weeks and nine postcodes (one
+  // missing from the lookup, one blank), junk prices and one unparseable
+  // date. Seeded, so every run reads the same file.
+  private def dailyCsv(dropId: Boolean = false): String = {
+    val rnd = new scala.util.Random(7)
+    val postcodes = Seq("SW1A 1AA", "sw1a 2bb", "EC1A 1BB", "EC1A 2CC",
+      "M1 1AE", "M1 2BF", "LS1 1UR", "ZZ9 9ZZ", "")
+    val start = java.time.LocalDate.of(2023, 3, 6)
+    val lines = (1 to 3000).map { i =>
+      val date = if (i == 1500) "not-a-date"
+        else s"${start.plusDays(rnd.nextInt(280L.toInt))} 00:00"
+      val price = if (rnd.nextInt(50) == 0) "n/a"
+        else (50000 + rnd.nextInt(900000)).toString
+      val cells = Seq(s"T$i", price, date, postcodes(rnd.nextInt(postcodes.size)),
+        Seq("D", "S", "T", "F")(rnd.nextInt(4)))
+      (if (dropId) cells.drop(1) else cells).mkString(",")
+    }
+    val head = if (dropId) header.split(",").drop(1).mkString(",") else header
+    tmpFile("daily.csv", (head +: lines).mkString("\n"))
+  }
+  private val dailyLookup = tmpFile("daily_lookup.csv",
+    "postcode,local_authority\nSW1A1AA,Westminster\nSW1A2BB,Westminster\n" +
+      "EC1A1BB,Islington\nEC1A2CC,Islington\nM11AE,Manchester\n" +
+      "M12BF,Manchester\nLS11UR,Leeds\n")
+  private val nopSink: Sinks.ReportSink = (_: String, _: DataFrame) => ()
+
+  private def dailyCfg(input: String, noUpload: Boolean = true) =
+    HousingEtlMain.Config(input = input, lookup = Some(dailyLookup),
+      cacheDir = Files.createTempDirectory("graft-daily-cache").toString,
+      outDir = Files.createTempDirectory("graft-daily-art").toString,
+      noUpload = noUpload, windows = Seq(2, 4))
+
+  /** A CSV artifact's lines, header included, as a sorted multiset. */
+  private def artifactLines(dir: String): Seq[String] =
+    spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted
+
+  test("rows_raw counts parsed rows: before the invalid-date drop, not the lookup fan-out") {
+    // SW1A1AA maps to two authorities, so T1, T2 and T5 join twice each
+    val dupLookup = tmpFile("dup_lookup.csv", "postcode,local_authority\n" +
+      "sw1a 1aa,Westminster\nSW1A1AA,St James's\nEC1A1BB,Islington\n")
+    val out = HousingEtl.run(spark, pricePaidCsv(), Some(dupLookup))
+    // the fan-out is real: both authorities count T1, T2 (week 1) and T5
+    assert(out.weekly.agg(org.apache.spark.sql.functions.sum("transactions"))
+      .head().getLong(0) == 6L)
+    // 5 data lines, T3's unparseable date included
+    assert(out.qa.head().getAs[Long]("rows_raw") == rows.size.toLong)
+    var lines = Vector.empty[String]
+    HousingEtlMain.runCli(spark, dailyCfg(pricePaidCsv()).copy(lookup = Some(dupLookup)),
+      nopSink, _ => nopSink, log = lines :+= _)
+    assert(lines.exists(_.startsWith(s"qa: rows_raw=${rows.size} ")))
+  }
+
+  test("runCli scans the landing CSV once: every other plan reads one cached frame") {
+    // Scans of landing.csv in an executed plan: those outside any cached
+    // frame, and the cached frames (one entry per cache) that scan it
+    // themselves rather than through another cache. Header sniffing reads
+    // the first line through a `text` scan and is not counted.
+    val uncached = mutable.ArrayBuffer.empty[String]
+    val caches = mutable.Set.empty[Int]
+    def walk(p: SparkPlan, cache: Option[Int], fn: String): Unit = p match {
+      case s: FileSourceScanExec if !s.relation.fileFormat.isInstanceOf[TextFileFormat] &&
+          s.relation.location.rootPaths.exists(_.getName == "landing.csv") =>
+        cache.fold[Unit](uncached += fn)(caches += _)
+      case m: InMemoryTableScanExec =>
+        walk(m.relation.cachedPlan, Some(System.identityHashCode(m.relation.cacheBuilder)), fn)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, cache, fn)
+      case q: QueryStageExec => walk(q.plan, cache, fn)
+      case r: ReusedExchangeExec => walk(r.child, cache, fn)
+      case other => (other.children ++ other.subqueries).foreach(walk(_, cache, fn))
+    }
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        synchronized(walk(qe.executedPlan, None, fn))
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val pushed = mutable.ArrayBuffer.empty[String]
+    val push = new Sinks.StringifiedPushSink((tab, _) => pushed += tab)
+    spark.listenerManager.register(listener)
+    try {
+      HousingEtlMain.runCli(spark, dailyCfg(dailyCsv(), noUpload = false), push,
+        _ => nopSink)
+      GraftTestAccess.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(pushed.size == 6)  // the pushes read the cached tabs too
+    assert(uncached.isEmpty, s"plans that re-scan landing.csv: $uncached")
+    assert(caches.size == 1)
+  }
+
+  test("concurrent artifacts equal the lazy sequential outputs; caches are released") {
+    for (dropId <- Seq(false, true)) {
+      val input = dailyCsv(dropId)
+      val cfg = dailyCfg(input)
+      HousingEtlMain.runCli(spark, cfg, nopSink, _ => nopSink)
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // the same tabs from the lazy plans, uncached, one write after another
+      val seqDir = Files.createTempDirectory("graft-daily-seq").toString
+      val seqSink = new Sinks.CsvDirSink(seqDir)
+      val tabs = HousingEtl.artifactTabs(
+        HousingEtl.run(spark, input, cfg.lookup, windows = cfg.windows))
+      tabs.foreach { case (tab, df) => seqSink.write(tab, df) }
+      assert(tabs.map(_._1) == Seq("weekly", "type_breakdown", "windows",
+        "anomalies", "latest_snapshot", "qa"))
+      for ((tab, _) <- tabs) {
+        val got = artifactLines(s"${cfg.outDir}/$tab")
+        assert(got.size > 1, s"$tab is empty")
+        assert(got == artifactLines(s"$seqDir/$tab"), s"$tab (dropId=$dropId)")
+      }
+    }
+  }
+
+  test("a failing artifact write fails the run once every write is done, caches released") {
+    val failing: String => Sinks.ReportSink = dir => {
+      val csv = new Sinks.CsvDirSink(dir)
+      (tab: String, df: DataFrame) =>
+        // fails inside a task, while the other tabs' jobs are running
+        csv.write(tab, if (tab != "anomalies") df
+          else df.withColumn("boom", raise_error(lit("artifact disk full")).cast("string")))
+    }
+    var lines = Vector.empty[String]
+    val cfg = dailyCfg(dailyCsv(), noUpload = false)
+    val e = intercept[Exception](HousingEtlMain.runCli(spark, cfg, nopSink,
+      _ => nopSink, log = lines :+= _, artifacts = failing))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("artifact disk full")), e)
+    GraftTestAccess.drainListeners(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the QA line and the pushes follow the artifacts, so neither happened
+    assert(!lines.exists(l => l.startsWith("qa:") || l.startsWith("timing:")))
+    // the other tabs were written in full
+    assert(artifactLines(s"${cfg.outDir}/weekly").size > 1)
+  }
+
+  test("runCli logs one timing line after the pushes, with every stage") {
+    var lines = Vector.empty[String]
+    val push: Sinks.ReportSink = (tab: String, _: DataFrame) => lines :+= s"pushed $tab"
+    HousingEtlMain.runCli(spark,
+      dailyCfg(pricePaidCsv(), noUpload = false).copy(bqTable = Some("p.d.t")),
+      push, _ => nopSink, log = lines :+= _)
+    val timing = lines.filter(_.startsWith("timing: "))
+    assert(timing.size == 1 && lines.last == timing.head)
+    val stages = timing.head.stripPrefix("timing: ").split(" ").toSeq.map { kv =>
+      val Array(stage, secs) = kv.split("=")
+      assert(secs.matches("\\d+\\.\\d{3}s"), kv)
+      stage
+    }
+    assert(stages == Seq("fetch", "plan", "artifacts", "push:weekly_by_la",
+      "push:windows", "push:latest", "push:anomalies", "push:type_breakdown",
+      "push:qa", "warehouse:p.d.t"))
+    assert(lines.indexWhere(_.startsWith("qa:")) < lines.indexOf("pushed weekly_by_la"))
   }
 
   test("S1-S3 landing zone: fetches once within TTL, backs up, force refetches") {
